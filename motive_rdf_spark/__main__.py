@@ -104,11 +104,9 @@ def _names_for(term_dict, ids: set[int]) -> dict[int, str] | None:
 
 def real_world(args, spark) -> None:
     from motive_rdf_spark.search import SAConfig, by_frequency, by_score, sa_parallel
-    from motive_rdf_spark.operators.mdl_ops import null_bits
     from motive_rdf_spark import report
 
     triples, node_dict, pred_dict = load_dataset(spark, args.data)
-    nb = null_bits(triples)
     cfg = SAConfig(
         iterations=args.iterations,
         alpha=args.alpha,
@@ -117,6 +115,7 @@ def real_world(args, spark) -> None:
         seed=args.seed,
     )
     state = sa_parallel(triples, chains=args.threads, config=cfg)
+    nb = state.null_bits  # the chains' null model, computed once per graph
     tagged = (
         ("byscore", by_score(state, args.topk)),
         ("byfreq", by_frequency(state, args.topk)),
@@ -167,7 +166,7 @@ def synth_rep(args, spark) -> None:
                           list(pat.edges), k, seed=args.seed or 0)
         ).persist()
         n, m, r = deg.graph_dims(g)
-        nb = null_bits(g)
+        nb = null_bits(g, dims=(n, m, r))
         matches = [list(x) for x in find(g, pat).collect()]
         matches.sort()
         kept = prune_matches(pat, matches)
@@ -221,7 +220,7 @@ def synthetic(args, spark) -> None:
         if pat.valid() and len(touched) == size:
             break
 
-    graphs, nulls = [], []
+    graphs, dims, nulls = [], [], []
     for i, k in enumerate(args.instances):
         g = prepare_triples(
             planted_graph(spark, args.nodes, args.links, args.relations,
@@ -229,7 +228,8 @@ def synthetic(args, spark) -> None:
         ).persist()
         g.count()
         graphs.append(g)
-        nulls.append(null_bits(g))
+        dims.append(deg.graph_dims(g))
+        nulls.append(null_bits(g, dims=dims[-1]))
 
     focus = len(graphs) // 2  # Synthetic.java:89 focus=1 of 3
     cfg = SAConfig(
@@ -243,7 +243,7 @@ def synthetic(args, spark) -> None:
     try:
         state = sa.run()
     finally:
-        sa.close()  # release the persisted per-graph degree frames
+        sa.close()  # release the statistics this chain built, if any
     motifs = by_score(state, args.topk)
 
     with open(os.path.join(args.output, "motifs.csv"), "w") as fm, open(
@@ -257,8 +257,7 @@ def synthetic(args, spark) -> None:
         for res in motifs:
             fm.write(str(res.pattern) + "\n")
             row = []
-            for g, nb in zip(graphs, nulls):
-                n, m, r = deg.graph_dims(g)
+            for g, (n, m, r), nb in zip(graphs, dims, nulls):
                 matches = sorted(
                     [list(x) for x in find(g, res.pattern).limit(cfg.max_matches).collect()]
                 )

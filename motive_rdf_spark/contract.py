@@ -1991,7 +1991,7 @@ def motif_induction(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         state = sa.run()
     finally:
-        sa.close()  # release the persisted per-graph degree frames
+        sa.close()  # release the statistics this chain built, if any
     top = by_score(state, 1)[0]
     rows = [
         ("planted_support", find_count(g, Pattern(pat))),

@@ -33,6 +33,7 @@ selectivity probes when ``probe=True``.
 
 from __future__ import annotations
 
+import threading
 import time
 from dataclasses import dataclass
 
@@ -84,7 +85,11 @@ class GraphStore:
     3×|G| (~15.6 B/triple per copy columnar); at 69M triples measured
     1.99 GiB vs 3.02 GiB persisted, identical answers on both query
     classes and faster on both (BENCH/BASELINE.md "GraphStore
-    storage")."""
+    storage").
+
+    The store also memoizes the graph's search statistics (``stats``):
+    every SA chain over one store shares them, and ``unpersist``
+    releases them with the copies."""
 
     def __init__(
         self,
@@ -96,7 +101,7 @@ class GraphStore:
 
         storage_level = storage_level or StorageLevel.MEMORY_AND_DISK
         t = prepare_triples(triples)
-        self._n: int | None = None
+        self._init_memo()
         # secondary cluster by p inside each hash partition: the
         # in-memory columnar cache keeps per-batch min/max stats, so a
         # constant-predicate edge scan (`p = c`, the common case —
@@ -137,11 +142,38 @@ class GraphStore:
     def n_triples(self) -> int:
         """Graph size, counted once (and cached) off the persisted
         plain copy — drives the expansion joins' strategy choice."""
-        if self._n is None:
-            self._n = self.plain.count()
-        return self._n
+        with self._memo_lock:
+            if self._n is None:
+                self._n = self.plain.count()
+            return self._n
+
+    def _init_memo(self) -> None:
+        self._n: int | None = None
+        self._stats = None
+        # sa_parallel's chains read the memo from concurrent threads
+        self._memo_lock = threading.Lock()
+
+    @property
+    def stats(self):
+        """The graph's search statistics, an ``mdl_ops.GraphDegrees``
+        (dims, persisted degree frames, dense degree arrays, null model),
+        computed on first use and shared by every search chain over this
+        store. The store holds them: ``unpersist`` releases them."""
+        from motive_rdf_spark.operators.mdl_ops import GraphDegrees
+
+        with self._memo_lock:
+            if self._stats is None:
+                self._stats = GraphDegrees(self.plain)
+            return self._stats
+
+    def _release_stats(self) -> None:
+        with self._memo_lock:
+            if self._stats is not None:
+                self._stats.unpersist()
+                self._stats = None
 
     def unpersist(self, blocking: bool = False) -> None:
+        self._release_stats()
         self.by_s.unpersist(blocking)
         self.by_o.unpersist(blocking)
         if self._own_plain:
@@ -174,18 +206,19 @@ class BucketedGraphStore(GraphStore):
     ``for_edge`` interface. Scans arrive hash-distributed on the join
     key straight from storage (bucketed FileScan reports the
     partitioning, so the expansion join elides the graph-side exchange
-    exactly like the persisted copies); nothing is pinned in executor
-    memory."""
+    exactly like the persisted copies); only the memoized search
+    statistics' degree frames are pinned, and ``unpersist`` releases
+    them."""
 
     def __init__(self, spark, name: str):
         self.by_s = spark.table(f"{name}_by_s")
         self.by_o = spark.table(f"{name}_by_o")
         self.plain = self.by_s
         self._own_plain = False
-        self._n = None
+        self._init_memo()
 
-    def unpersist(self) -> None:  # nothing pinned
-        pass
+    def unpersist(self, blocking: bool = False) -> None:  # tables stay
+        self._release_stats()
 
 
 def storage_bytes(spark) -> tuple[int, int]:

@@ -110,9 +110,9 @@ def find_delta(
     cached probe), so a delta that touches only some relations costs
     only those cascades (VERDICT r4 item 4) — and the cache is read k
     times instead of re-deriving the anti-join per run. The returned
-    DataFrame exposes the cached delta as ``._delta_cached`` so
-    callers that fully consume the result (``delta_support``) can
-    unpersist it; leaving it cached is harmless (it is |Δ|-sized)."""
+    DataFrame exposes the cached delta as ``._delta_cached``; the
+    caller must unpersist it once done (``delta_supports`` does), or
+    every call leaves one |Δ|-sized cache entry behind."""
     if not pattern.edges:
         raise ValueError("empty pattern")
     store = old if isinstance(old, GraphStore) else None
@@ -262,10 +262,24 @@ def find_delta(
     return out
 
 
+def delta_supports(old: DataFrame, delta: DataFrame, patterns: dict, **kw) -> dict:
+    """|Δmatch| per named pattern — add each to its maintained support
+    instead of re-counting the union graph. The prepared delta is the
+    same plan for every pattern, so the first ``find_delta`` caches it,
+    the later ones hit that cache entry, and it is released after the
+    last count."""
+    counts, cached = {}, []
+    try:
+        for name, pattern in patterns.items():
+            df = find_delta(old, delta, pattern, **kw)
+            cached.append(df._delta_cached)
+            counts[name] = df.count()
+    finally:
+        for d in cached:
+            d.unpersist()
+    return counts
+
+
 def delta_support(old: DataFrame, delta: DataFrame, pattern: Pattern, **kw) -> int:
-    """|Δmatch| — add to the maintained support instead of re-counting
-    the union graph."""
-    df = find_delta(old, delta, pattern, **kw)
-    n = df.count()
-    df._delta_cached.unpersist()
-    return n
+    """|Δmatch| of one pattern (see ``delta_supports``)."""
+    return delta_supports(old, delta, {0: pattern}, **kw)[0]

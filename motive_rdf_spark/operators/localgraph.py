@@ -86,9 +86,15 @@ class LocalGraph:
     @classmethod
     def from_df(cls, triples) -> "LocalGraph":
         """Collect a (s, p, o) DataFrame. Caller is responsible for the
-        LOCAL_GRAPH_LIMIT gate (it already knows m from graph_dims)."""
+        LOCAL_GRAPH_LIMIT gate (it already knows m from graph_dims).
+
+        Duplicate triples are dropped on the driver, keeping each one's
+        first occurrence in collected order: KGraph is a set, as
+        ``bgp.prepare_triples`` makes the distributed tier's graph."""
         pdf = triples.select("s", "p", "o").toPandas()
-        return cls(pdf["s"].to_numpy(), pdf["p"].to_numpy(), pdf["o"].to_numpy())
+        spo = np.stack([pdf[c].to_numpy(dtype=np.int64) for c in ("s", "p", "o")], axis=1)
+        spo = spo[np.sort(np.unique(spo, axis=0, return_index=True)[1])]
+        return cls(spo[:, 0], spo[:, 1], spo[:, 2])
 
     def dims(self) -> tuple[int, int, int]:
         """(n, m, r) under the same dense-id contract as
@@ -266,7 +272,7 @@ class LocalGraph:
 
     def degree_arrays(self, n: int, r: int) -> tuple:
         """(in, out, rel) dense degree vectors — the same statistic
-        GraphDegrees.driver_arrays collects, computed locally."""
+        GraphDegrees.arrays holds, computed locally."""
         return (
             np.bincount(self.O, minlength=n),
             np.bincount(self.S, minlength=n),

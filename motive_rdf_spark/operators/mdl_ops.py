@@ -7,6 +7,9 @@ collected. Reference: MotifCode.codelength (MotifCode.java:56-137).
 
 from __future__ import annotations
 
+import threading
+import weakref
+
 from pyspark.sql import DataFrame, functions as F
 
 from motive_rdf_spark.functions.mdl import (
@@ -17,6 +20,7 @@ from motive_rdf_spark.functions.mdl import (
     motif_codelength,
 )
 from motive_rdf_spark.operators import degrees as deg
+from motive_rdf_spark.operators.bgp import prepare_triples
 from motive_rdf_spark.operators.prune import instance_triples_df
 from motive_rdf_spark.patterns import Pattern, var_col
 
@@ -28,56 +32,91 @@ DRIVER_DEGREE_LIMIT = 2_000_000
 
 
 class GraphDegrees:
-    """Persisted per-position degree frames of ONE graph. They are
-    pattern-independent, so a search loop builds them once and every
-    ``score_motif`` call reuses them — previously each candidate
-    recomputed all three groupBys (3 shuffles per score). Re-persisting
-    an identical plan is a cache hit in Spark's CacheManager, so N
-    search chains over the same graph share one copy."""
+    """The per-graph constants every search candidate is scored against,
+    over the graph's deduplicated triples (KGraph is a set): ``(n, m, r)``,
+    the persisted per-position degree frames, their dense driver form
+    ``arrays`` (None above DRIVER_DEGREE_LIMIT, the 100 TB case: stay
+    distributed) and the null model's codelength ``null_bits``. The
+    frames are pattern-independent, so every ``score_motif`` call of a
+    search reuses them instead of running three groupBy shuffles.
+
+    Building costs one ``graph_dims`` job plus one collect per frame, or
+    nothing while another live ``GraphDegrees`` has the same graph plan:
+    Spark's CacheManager keeps one cache entry per plan, so such holders
+    share their frames anyway, and ``unpersist`` uncaches them only when
+    the last of those holders releases. ``GraphStore.stats`` memoizes one
+    per store; a search chain over a plain DataFrame builds its own and
+    ``SimAnnealing.close`` releases it."""
 
     def __init__(self, triples: DataFrame):
-        self.in_deg = deg.in_degrees(triples).persist()
-        self.out_deg = deg.out_degrees(triples).persist()
-        self.rel_deg = deg.rel_degrees(triples).persist()
-        self._np: tuple | None = None
-        self._np_refused = False
+        self.graph = prepare_triples(triples)
+        # held while building, so a twin is never released half-copied
+        with _live_lock:
+            twin = next(
+                (d for d in _live if d.graph.sameSemantics(self.graph)), None
+            )
+            if twin is not None:
+                self.__dict__.update(twin.__dict__)
+            else:
+                self._build()
+            _live.add(self)
 
-    def driver_arrays(self, n: int, r: int) -> tuple | None:
-        """Dense (in, out, rel) numpy degree vectors for the driver-exact
-        scoring tier, or None when the id spaces exceed
-        DRIVER_DEGREE_LIMIT (the 100 TB case: stay distributed).
-        Collected once per graph and memoized."""
-        if self._np is not None:
-            return self._np
-        if self._np_refused or max(n, r) > DRIVER_DEGREE_LIMIT:
-            self._np_refused = True
-            return None
-        import numpy as np
-
-        def dense(df: DataFrame, key: str, space: int) -> "np.ndarray":
-            arr = np.zeros(space, dtype=np.int64)
-            for row in df.collect():
-                arr[int(row[key])] = int(row["deg"])
-            return arr
-
-        self._np = (
-            dense(self.in_deg, "node", n),
-            dense(self.out_deg, "node", n),
-            dense(self.rel_deg, "rel", r),
-        )
-        return self._np
+    def _build(self) -> None:
+        t = self.graph
+        self.n, self.m, self.r = deg.graph_dims(t)
+        self.in_deg = deg.in_degrees(t).persist()
+        self.out_deg = deg.out_degrees(t).persist()
+        self.rel_deg = deg.rel_degrees(t).persist()
+        self.arrays = None
+        if max(self.n, self.r) <= DRIVER_DEGREE_LIMIT:
+            self.arrays = (
+                _dense(self.in_deg, self.n),
+                _dense(self.out_deg, self.n),
+                _dense(self.rel_deg, self.r),
+            )
+            self.null_bits = null_bits_arrays(self.arrays)
+        else:
+            self.null_bits = null_bits(t, degs=self, dims=(self.n, self.m, self.r))
 
     def unpersist(self) -> None:
-        for d in (self.in_deg, self.out_deg, self.rel_deg):
-            d.unpersist()
+        """Release this holder; the frames are uncached once no live
+        holder of the same graph plan is left. Idempotent."""
+        with _live_lock:
+            if self not in _live:
+                return
+            _live.discard(self)
+            if any(d.graph.sameSemantics(self.graph) for d in _live):
+                return
+            for d in (self.in_deg, self.out_deg, self.rel_deg):
+                d.unpersist()
+
+
+#: every GraphDegrees not yet released (weak: a dropped holder releases
+#: nothing, as with any persisted DataFrame nobody unpersists)
+_live: "weakref.WeakSet[GraphDegrees]" = weakref.WeakSet()
+_live_lock = threading.Lock()
+
+
+def _dense(df: DataFrame, space: int) -> "np.ndarray":
+    """A (key, deg) frame as a dense numpy degree vector: one collect."""
+    import numpy as np
+
+    kv = np.array(df.collect(), dtype=np.int64).reshape(-1, 2)
+    arr = np.zeros(space, dtype=np.int64)
+    arr[kv[:, 0]] = kv[:, 1]
+    return arr
 
 
 def null_bits(
-    triples: DataFrame, prior: Prior = Prior.ML, degs: GraphDegrees | None = None
+    triples: DataFrame,
+    prior: Prior = Prior.ML,
+    degs: GraphDegrees | None = None,
+    dims: tuple[int, int, int] | None = None,
 ) -> float:
     """EdgeListModel.codelength(KGraph.degrees(data), prior) — the null
-    model every motif competes against (RealWorld.java:62)."""
-    n, m, r = deg.graph_dims(triples)
+    model every motif competes against (RealWorld.java:62). ``dims``
+    passes an already-known ``graph_dims`` result."""
+    n, _, r = dims or deg.graph_dims(triples)
     if degs is None:
         return edgelist_codelength(deg.degree_histograms(triples, n, r), prior)
     hists = [
@@ -214,7 +253,7 @@ def score_motif_rows(
     Spark jobs. Used by the search hot loop when the (already
     overlap-pruned) matches live on the driver — the prune_matches
     path, bounded by ``driver_prune_threshold`` rows — and the graph's
-    id spaces fit ``GraphDegrees.driver_arrays``. The histogram algebra
+    id spaces fit ``GraphDegrees.arrays``. The histogram algebra
     mirrors template_degree_hists/variable_freq_hists exactly: dense
     degree vector minus instance-triple contribution, then
     value-histogram (the Spark path's full-outer-join + implicit-zeros

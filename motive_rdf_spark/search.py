@@ -44,7 +44,6 @@ from motive_rdf_spark.operators.bgp import find, find_budgeted
 from motive_rdf_spark.operators.localgraph import LOCAL_GRAPH_LIMIT, LocalGraph
 from motive_rdf_spark.operators.mdl_ops import (
     GraphDegrees,
-    null_bits,
     null_bits_arrays,
     score_motif,
     score_motif_rows,
@@ -132,37 +131,46 @@ class SimAnnealing:
         self._inc_cache: dict[int, list] = {}
         # driver tier: small graphs are collected once into an indexed
         # in-memory table (zero Spark jobs per candidate); above the cap
-        # the distributed matcher + persisted degree frames serve every
+        # the distributed matcher + the graph's GraphDegrees serve every
         # candidate (operators/localgraph.py module docstring). A
         # pre-built LocalGraph may be passed directly — the whole search
         # then runs Spark-free (process-parallel via sa_parallel_local).
         self._local: LocalGraph | None = None
         self._degs: GraphDegrees | None = None
+        # statistics this chain built itself and must release in close();
+        # a GraphStore's memoized statistics are borrowed
+        self._own_degs: GraphDegrees | None = None
         if isinstance(triples, LocalGraph):
             self._local = triples
             self.triples = None
             self._match_src = None
-            n, m, r = triples.dims()
         else:
             # a GraphStore (pre-partitioned copies) speeds every match
             # job in the hot loop; .triples stays the plain DataFrame
-            # for degree aggregations and sampling filters
-            self._match_src: DataFrame | GraphStore
-            if isinstance(triples, GraphStore):
-                self._match_src = triples
-                triples = triples.plain
-            else:
-                self._match_src = triples
-            self.triples = triples
-            n, m, r = deg.graph_dims(triples)
-            if self.cfg.local_graph and m <= LOCAL_GRAPH_LIMIT:
-                self._local = LocalGraph.from_df(triples)
+            # for sampling filters
+            self._match_src: DataFrame | GraphStore = triples
+            store = triples if isinstance(triples, GraphStore) else None
+            self.triples = store.plain if store is not None else triples
+            if self.cfg.local_graph:
+                # a store's memoized count is m over its deduplicated triples
+                if store is not None:
+                    m = store.n_triples
+                else:
+                    _, m, _ = deg.graph_dims(self.triples)
+                if m <= LOCAL_GRAPH_LIMIT:
+                    self._local = LocalGraph.from_df(self.triples)
+            if self._local is None:
+                if store is not None:
+                    self._degs = store.stats
+                else:
+                    self._degs = self._own_degs = GraphDegrees(self.triples)
         if self._local is not None:
+            n, m, r = self._local.dims()
             self._local_degs = self._local.degree_arrays(n, r)
             nb = null_bits_arrays(self._local_degs)
         else:
-            self._degs = GraphDegrees(triples)
-            nb = null_bits(triples, degs=self._degs)
+            d = self._degs
+            n, m, r, nb = d.n, d.m, d.r, d.null_bits
         self.state = SAState(null_bits=nb, n=n, m=m, r=r)
         # default start: a random triple with its object made a variable
         # (SimAnnealing.java:146-152); callers may seed a warm start
@@ -203,11 +211,10 @@ class SimAnnealing:
                 rows = [list(r) for r in probe]
                 rows.sort()
                 kept = prune_matches(pattern, rows)
-                degs_np = self._degs.driver_arrays(st.n, st.r)
-                if degs_np is not None:
+                if self._degs.arrays is not None:
                     # driver-exact scoring: zero Spark jobs per candidate
                     sc = score_motif_rows(
-                        pattern, kept, st.n, st.m, st.r, degs_np
+                        pattern, kept, st.n, st.m, st.r, self._degs.arrays
                     )
                 else:
                     spark = self.triples.sparkSession
@@ -298,14 +305,18 @@ class SimAnnealing:
             if self._local is not None:
                 # budget the sampling enumeration too: a pathological
                 # accepted pattern (alpha accepts regardless of score)
-                # must not stall the loop hunting for its 20th match
+                # must not stall the loop hunting for its 20th match.
+                # A max_steps budget is enough on its own and keeps
+                # fixed-seed sampling independent of timing.
                 import time as _time
 
-                budget = self.cfg.max_time_s or 5.0
+                budget = self.cfg.max_time_s
+                if budget is None and self.cfg.max_steps is None:
+                    budget = 5.0
                 rows, _ = self._local.find_rows(
                     pattern,
                     max_rows=self.cfg.sample_rows,
-                    deadline=_time.monotonic() + budget,
+                    deadline=None if budget is None else _time.monotonic() + budget,
                     max_steps=self.cfg.max_steps,
                 )
             else:
@@ -460,12 +471,13 @@ class SimAnnealing:
         return self.state
 
     def close(self) -> None:
-        """Release the persisted degree frames (distributed tier only;
-        the LocalGraph tier holds no Spark state). Not called from
-        run(): parallel chains share one cached copy (same plan), so
-        the owner of the last chain must close — sa_parallel does."""
-        if self._degs is not None:
-            self._degs.unpersist()
+        """Release what this chain owns: the statistics it built over a
+        plain DataFrame on the distributed tier. Statistics borrowed from
+        a GraphStore stay until ``GraphStore.unpersist``; the LocalGraph
+        tier holds no Spark state."""
+        if self._own_degs is not None:
+            self._own_degs.unpersist()
+            self._own_degs = None
 
 
 def by_score(state: SAState, k: int) -> list[MotifResult]:
@@ -489,7 +501,10 @@ def sa_parallel(
     constructor takes the same seed pattern — Synthetic.java:205).
 
     The graph is wrapped in ONE shared GraphStore (pre-partitioned
-    copies) so all chains' match jobs reuse it; released on return."""
+    copies) so all chains' match jobs reuse it and borrow its search
+    statistics, computed once by the first chain that needs them. A
+    store built here is released on return; a store passed in stays
+    with its caller."""
     from concurrent.futures import ThreadPoolExecutor
 
     from motive_rdf_spark.operators.bgp import GraphStore
@@ -498,22 +513,18 @@ def sa_parallel(
     own_store = not isinstance(triples, GraphStore)
     src = GraphStore(triples) if own_store else triples
 
-    sas: list[SimAnnealing] = []
-
     def run_chain(i: int) -> SAState:
         cfg = replace(base, seed=None if base.seed is None else base.seed + i)
         sa = SimAnnealing(src, cfg, init_pattern=init_pattern)
-        sas.append(sa)
-        return sa.run()
+        try:
+            return sa.run()
+        finally:
+            sa.close()
 
     try:
         with ThreadPoolExecutor(max_workers=chains) as pool:
             states = list(pool.map(run_chain, range(chains)))
     finally:
-        # all chains done: the degree-frame cache entry is shared (same
-        # plan), so closing once after the barrier is safe
-        for sa in sas[:1]:
-            sa.close()
         if own_store:
             src.unpersist()
 

@@ -136,7 +136,7 @@ def run_support_stream(
     this sink keys its idempotence on those ids."""
     from pyspark.sql import functions as F
 
-    from motive_rdf_spark.operators.delta import find_delta
+    from motive_rdf_spark.operators.delta import delta_supports
     from motive_rdf_spark.pipeline.extract import extract_triples
 
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -164,13 +164,15 @@ def run_support_stream(
             new_enc = enc.persist()
         rows = []
         sup_tbl = _read(sup_path)
+        if old is not None:
+            deltas = delta_supports(old, new_enc, motifs, assume_new=True)
         for name, pat in motifs.items():
             if old is None:
                 from motive_rdf_spark.operators.bgp import find
 
                 d = find(new_enc, pat).count()
             else:
-                d = find_delta(old, new_enc, pat, assume_new=True).count()
+                d = deltas[name]
             prior = 0
             if sup_tbl is not None:
                 r = (

@@ -74,6 +74,36 @@ def test_delta_support_maintenance(spark):
     assert find_count(old, pat) + delta_support(old, delta, pat) == total
 
 
+def test_delta_supports_shares_then_releases_the_delta(spark, monkeypatch):
+    """delta_supports counts every pattern like find_delta, keeps the
+    prepared delta cached from one pattern to the next (the later
+    find_delta calls hit it instead of re-deriving the anti-join against
+    the old graph) and releases it after the last count."""
+    from pyspark import StorageLevel
+
+    from motive_rdf_spark.operators import delta as D
+
+    old = random_graph(spark, 80, 300, 4, seed=3).cache()
+    delta = random_graph(spark, 80, 60, 4, seed=5)
+    pats = {"tri": Pattern(TRIANGLE), "vee": Pattern(VEE)}
+    expect = {k: delta_support(old, delta, p) for k, p in pats.items()}
+    handles = []
+    real = D.find_delta
+
+    def spy(*args, **kwargs):
+        # every delta cached so far is still cached when the next starts
+        assert all(h.storageLevel != StorageLevel.NONE for h in handles)
+        out = real(*args, **kwargs)
+        handles.append(out._delta_cached)
+        return out
+
+    monkeypatch.setattr(D, "find_delta", spy)
+    assert D.delta_supports(old, delta, pats) == expect
+    assert len(handles) == 2
+    assert all(h.storageLevel == StorageLevel.NONE for h in handles)
+    old.unpersist()
+
+
 def test_empty_delta_yields_nothing(spark):
     pat = Pattern(VEE)
     old = random_graph(spark, 40, 150, 3, seed=8).cache()

@@ -206,7 +206,7 @@ def test_driver_exact_scoring_equals_distributed(spark):
             )
             dist = score_motif(g, pat, kept_df, gn, gm, gr, degs=degs)
             drv = score_motif_rows(
-                pat, kept, gn, gm, gr, degs.driver_arrays(gn, gr)
+                pat, kept, gn, gm, gr, degs.arrays
             )
             assert drv.total == pytest.approx(dist.total, abs=1e-9), (edges, drv, dist)
     finally:

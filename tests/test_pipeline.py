@@ -391,3 +391,42 @@ def test_dense_ids_single_exchange_plan(spark):
     d = df.select("term").repartitionByRange(4, F.col("term")).dropDuplicates(["term"])
     plan = d._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1, plan
+
+
+def test_motif_maintenance_does_not_grow_persisted_rdds(spark, tmp_path, monkeypatch):
+    """Each snapshot's motif-support maintenance (find_delta over the
+    history) releases everything it persists: over N snapshots the
+    persisted RDD count around that step never grows. Local checkpoints
+    are released by Spark's ContextCleaner once unreachable, so the
+    count is taken after a forced GC."""
+    import gc
+    import time
+
+    from motive_rdf_spark.patterns import Pattern
+    from motive_rdf_spark.pipeline import materialize as M
+
+    jsc = spark.sparkContext._jsc
+
+    def left_since(before: set) -> set:
+        for _ in range(20):
+            gc.collect()
+            spark._jvm.System.gc()
+            time.sleep(0.25)
+            extra = set(jsc.getPersistentRDDs().keys()) - before
+            if not extra:
+                break
+        return extra
+
+    left = []
+    maintain = M._maintain_motif_supports
+
+    def tracked(*args, **kwargs):
+        before = set(jsc.getPersistentRDDs().keys())
+        maintain(*args, **kwargs)
+        left.append(left_since(before))
+
+    monkeypatch.setattr(M, "_maintain_motif_supports", tracked)
+    src = source_code_table(spark, 60, commits=3).drop("k")
+    motifs = {"vee": Pattern([(-1, -4, -2), (-1, -5, -3)]), "edge": Pattern([(-1, -4, -2)])}
+    run_pipeline(spark, src, candidate_dict(spark, 60), str(tmp_path / "kg"), motifs=motifs)
+    assert left == [set()] * 3
